@@ -1042,7 +1042,7 @@ def test_boilerplate_fraction_crafted(spark):
     out = {
         r["doc_id"]: r
         for r in boilerplate_fraction(
-            df, "text", "doc_id", 3, 2, persist=False
+            df, "text", "doc_id", 3, 2
         ).collect()
     }
     # doc 1: grams = [common header text, header text plus,
@@ -1153,7 +1153,7 @@ def test_containment_catches_embedded_copy(spark):
         (r["i"], r["j"]): r["cont"]
         for r in containment_pairs(
             df, "text", "doc_id", threshold=0.9,
-            num_hashes=16, bands=16, persist=False,
+            num_hashes=16, bands=16,
         ).collect()
     }
     assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
@@ -1250,13 +1250,13 @@ def test_containment_anchor_path_finds_tiny_in_huge(spark):
         [(1, tiny), (2, huge)] + others, "doc_id long, text string"
     )
     banded = containment_pairs(
-        df, "text", "doc_id", threshold=0.8, persist=False
+        df, "text", "doc_id", threshold=0.8
     ).collect()
     assert (1, 2) not in {(r["i"], r["j"]) for r in banded}, (
         "banding unexpectedly found the planted pair; test premise broken"
     )
     anchored = containment_pairs(
-        df, "text", "doc_id", threshold=0.8, persist=False, anchors=8
+        df, "text", "doc_id", threshold=0.8, anchors=8
     ).collect()
     hits = {(r["i"], r["j"]): r["cont"] for r in anchored}
     assert (1, 2) in hits, hits
@@ -1738,12 +1738,12 @@ def test_lsh_max_bucket_guards_mass_duplication(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
     unguarded = near_dup_pairs(
-        df, "text", "doc_id", threshold=0.5, persist=False
+        df, "text", "doc_id", threshold=0.5
     ).collect()
     assert sum(1 for r in unguarded if r.i < 30) == 30 * 29 / 2
 
     guarded = near_dup_pairs(
-        df, "text", "doc_id", threshold=0.5, persist=False, max_bucket=10
+        df, "text", "doc_id", threshold=0.5, max_bucket=10
     ).collect()
     assert all(r.i >= 100 for r in guarded), guarded
     assert {(r.i, r.j) for r in guarded} == {(100, 101)}
@@ -6536,12 +6536,13 @@ def test_kn3_fit_model_roundtrip_matches_in_pass_verdicts(
         ).collect()
 
 
-def test_scoped_caches_release_blocks_after_collect(spark):
-    """r13 (VERDICT r12 item 5): the multi-consumer intermediates the
-    dedup/text ledger builders persist must be RELEASED when the
-    caller drops the result — a 316-entry sweep must not accumulate
-    MEMORY_AND_DISK blocks in the shared session (guide §5: caching
-    competes with execution memory; unpersist when done)."""
+def test_lazy_checkpoints_held_during_action_released_after(spark):
+    """The multi-consumer intermediates the dedup/text ledger builders
+    share through a lazy localCheckpoint must be HELD while the result
+    frame is alive (the checkpoint is actually read by the action, not
+    dropped before it) and RELEASED once the caller drops the result —
+    a 316-entry sweep must not accumulate MEMORY_AND_DISK blocks in
+    the shared session."""
     import gc
     import time
 
@@ -6550,33 +6551,38 @@ def test_scoped_caches_release_blocks_after_collect(spark):
 
     sc = spark.sparkContext
 
-    def _blocks() -> int:
-        return len(sc._jsc.sc().getRDDStorageInfo())
+    def _held() -> set[int]:
+        # ids of RDDs with stored blocks; tracked by id because earlier
+        # tests' checkpoints may be drained by ContextCleaner meanwhile
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
 
-    # In a full-suite session earlier tests' localCheckpoint RDDs
-    # linger until ContextCleaner drains them, so assert NET growth
-    # (settled count back at/below the baseline), not absolute zero.
-    gc.collect()
-    spark._jvm.System.gc()
-    time.sleep(0.5)
-    base = _blocks()
+    def _settle() -> None:
+        # release goes through ContextCleaner: the JVM frame must be
+        # collected before its checkpoint RDD is unpersisted
+        gc.collect()
+        spark._jvm.System.gc()
+
     for name in (
-        "d06_lsh_neardup_pipeline",  # banded + grams caches
-        "d37_prefix_jaccard",  # element-table cache
-        "d52_cdc_dedup",  # chunk-frame cache
-        "t07_tfidf",  # tf cache
+        "d06_lsh_neardup_pipeline",  # banded + grams checkpoints
+        "d37_prefix_jaccard",  # element-table checkpoint
+        "d52_cdc_dedup",  # chunk-frame checkpoint
+        "t07_tfidf",  # tf checkpoint
+        "t13_boilerplate",  # (doc, gram) checkpoint
+        "t29_ngram_novelty",  # exploded gram checkpoint
+        "d13_containment_pairs",  # banded + grams checkpoints
     ):
+        base = _held()
         out = QUERIES[name](spark, SF_SMOKE_DIR)
         assert out.collect()
-        # while the result frame is alive its caches may stay
+        new = _held() - base
+        assert new, f"{name} held no blocks during its action"
         del out
-        gc.collect()
-        # unpersist is non-blocking; give the JVM a moment
         for _ in range(100):
-            if _blocks() <= base:
+            _settle()
+            if not _held() & new:
                 break
             time.sleep(0.1)
-        assert _blocks() <= base, f"{name} leaked persisted blocks"
+        assert not _held() & new, f"{name} leaked checkpoint blocks"
 
 
 def test_graph_broadcast_gate_paths_agree(spark):
@@ -6599,6 +6605,9 @@ def test_graph_broadcast_gate_paths_agree(spark):
     assert _parse_byte_conf("1g") == 1024**3
     assert _parse_byte_conf("-1") == -1
     assert _parse_byte_conf(524288) == 524288
+    assert _parse_byte_conf("1pb") == 1024**5
+    # unparseable: the no-broadcast sentinel, not an exception
+    assert _parse_byte_conf("garbage") == -1
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (5, 6)],

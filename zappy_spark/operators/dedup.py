@@ -201,7 +201,6 @@ def lsh_candidate_pairs(
     bands: int = 4,
     rows: int = 4,
     max_bucket: int | str | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Band the signatures and bucket-join: docs agreeing on all
     ``rows`` hashes of any band become a candidate pair (i < j).
@@ -251,21 +250,8 @@ def lsh_candidate_pairs(
             )
         ).alias("bucket"),
     )
-    # r12 (guide §5): the banded frame feeds BOTH self-join sides,
-    # plus the bucket-size agg / auto-cap quantile when a flood
-    # guard is set — each consumer otherwise re-runs the whole
-    # num_hashes-way MinHash aggregation upstream. Narrow
-    # (id, bucket) rows; MEMORY_AND_DISK spills gracefully.
-    # ``persist=False`` keeps the plan fully lazy (the
-    # near_dup_pairs contract, plan-pinned in test_plans).
-    # r13 (VERDICT r12 item 5): scope the cache to the returned
-    # frame's lifetime so the blocks are released when the caller
-    # drops the result instead of leaking into the session.
-    banded_c = None
-    if persist:
-        from zappy_spark.operators._scoped import cache_scoped
-
-        banded = banded_c = cache_scoped(banded)
+    # feeds both self-join sides plus the flood guard's bucket-size agg
+    banded = banded.localCheckpoint(eager=False)
     if max_bucket is not None:
         if max_bucket == "auto":
             max_bucket = auto_max_bucket(banded)
@@ -279,17 +265,14 @@ def lsh_candidate_pairs(
     other = banded.select(
         F.col("_id").alias("_id2"), F.col("bucket").alias("bucket2")
     )
-    from zappy_spark.operators._scoped import own
-
-    return own(
+    return (
         banded.join(
             other,
             (F.col("bucket") == F.col("bucket2"))
             & (F.col("_id") < F.col("_id2")),
         )
         .select(F.col("_id").alias("i"), F.col("_id2").alias("j"))
-        .distinct(),
-        banded_c,
+        .distinct()
     )
 
 
@@ -312,7 +295,6 @@ def near_dup_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     k: int = 3,
-    persist: bool = True,
     max_bucket: int | str | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures → banded bucket
@@ -323,11 +305,9 @@ def near_dup_pairs(
 
     The shingle expansion (``grams``) feeds three consumers — the
     signature aggregation and both sides of the verify join — so it is
-    persisted (MEMORY_AND_DISK) by default: one scan+shingle pass
-    instead of three, which at real scale is the difference between
-    reading the corpus once and three times. Spark evicts the cache
-    LRU; pass ``persist=False`` to keep the plan fully lazy (e.g. when
-    the caller checkpoints grams itself)."""
+    checkpointed: one scan+shingle pass instead of three, which at
+    real scale is the difference between reading the corpus once and
+    three times."""
     if bands < 1:
         raise ValueError(f"bands must be >= 1, got {bands}")
     if num_hashes % bands != 0:
@@ -340,17 +320,11 @@ def near_dup_pairs(
         F.col(id_col).alias("_gid"),
         word_shingles(F.col(text_col), k).alias("grams"),
     ).filter(F.size("grams") > 0)
-    grams_c = None
-    if persist:
-        from zappy_spark.operators._scoped import cache_scoped
-
-        grams = grams_c = cache_scoped(grams)
+    grams = grams.localCheckpoint(eager=False)
     sig = minhash_signature_from_grams(
         grams.select(F.col("_gid").alias(id_col), "grams"), id_col, num_hashes
     )
-    cand = lsh_candidate_pairs(
-        sig, id_col, bands, rows, max_bucket, persist=persist
-    )
+    cand = lsh_candidate_pairs(sig, id_col, bands, rows, max_bucket)
     # Exploded-gram verify (same rationale as containment_pairs):
     # narrow (doc, gram) rows instead of shuffling both full gram
     # arrays as one record per candidate. Jaccard = inter /
@@ -368,9 +342,7 @@ def near_dup_pairs(
         .groupBy("i", "j")
         .agg(F.count("*").alias("_inter"))
     )
-    from zappy_spark.operators._scoped import own
-
-    return own(
+    return (
         inter.join(
             sizes.select(F.col("_gid").alias("i"), F.col("_n").alias("_na")),
             "i",
@@ -389,9 +361,7 @@ def near_dup_pairs(
                 )
             ).alias("jac"),
         )
-        .filter(F.col("jac") >= threshold),
-        grams_c,
-        cand,
+        .filter(F.col("jac") >= threshold)
     )
 
 
@@ -576,7 +546,6 @@ def containment_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     k: int = 3,
-    persist: bool = True,
     anchors: int | None = None,
     anchor_max_df: int | None = 1000,
     max_bucket: int | None = None,
@@ -611,17 +580,11 @@ def containment_pairs(
         F.col(id_col).alias("_gid"),
         word_shingles(F.col(text_col), k).alias("grams"),
     ).filter(F.size("grams") > 0)
-    grams_c = None
-    if persist:
-        from zappy_spark.operators._scoped import cache_scoped
-
-        grams = grams_c = cache_scoped(grams)
+    grams = grams.localCheckpoint(eager=False)
     sig = minhash_signature_from_grams(
         grams.select(F.col("_gid").alias(id_col), "grams"), id_col, num_hashes
     )
-    cand = lsh_candidate_pairs(
-        sig, id_col, bands, rows, max_bucket, persist=persist
-    )
+    cand = lsh_candidate_pairs(sig, id_col, bands, rows, max_bucket)
     if anchors:
         cand = (
             cand.unionByName(
@@ -651,9 +614,7 @@ def containment_pairs(
         .groupBy("i", "j")
         .agg(F.count("*").alias("_inter"))
     )
-    from zappy_spark.operators._scoped import own
-
-    return own(
+    return (
         inter.join(
             sizes.select(F.col("_gid").alias("i"), F.col("_n").alias("_na")),
             "i",
@@ -670,9 +631,7 @@ def containment_pairs(
                 / F.least("_na", "_nb").cast("double")
             ).alias("cont"),
         )
-        .filter(F.col("cont") >= threshold),
-        grams_c,
-        cand,
+        .filter(F.col("cont") >= threshold)
     )
 
 
@@ -695,7 +654,7 @@ def containment_anchor_candidates(
     from the index (stopword-like shingles), bounding the join
     fan-out to q·max_df candidates per doc worst-case; the df filter
     and the candidate join shuffle on the same key, so AQE
-    co-partitions them. Input is the persisted ``grams`` frame
+    co-partitions them. Input is the checkpointed ``grams`` frame
     (``_gid``, ``grams``) the caller already materializes — no extra
     corpus scan. Output: (i, j) with i < j, distinct."""
     if q < 1:
@@ -1101,15 +1060,8 @@ def prefix_filter_pairs(
         )
         .filter(F.col("tok") != "")
     )
-    # r12 (guide §5; the near_dup_pairs persist precedent): the
-    # element table feeds FOUR consumers (sizes, df ranking, the
-    # ranked prefix, and both verify sides) — without a persist each
-    # re-runs the scan + shingle expansion + explode. MEMORY_AND_DISK
-    # spills gracefully at corpus scale; same rows either way.
-    # r13: scoped — released when the caller drops the result.
-    from zappy_spark.operators._scoped import cache_scoped, own
-
-    toks = cache_scoped(toks)
+    # feeds sizes, df ranking, the ranked prefix and both verify sides
+    toks = toks.localCheckpoint(eager=False)
     sizes = toks.groupBy("doc").agg(F.count("*").alias("sz"))
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("tdf"))
     w = Window.partitionBy("doc").orderBy("tdf", "tok")
@@ -1140,7 +1092,7 @@ def prefix_filter_pairs(
     )
     sa = sizes.select(F.col("doc").alias("i"), F.col("sz").alias("sza"))
     sb = sizes.select(F.col("doc").alias("j"), F.col("sz").alias("szb"))
-    return own(
+    return (
         inter.join(sa, "i")
         .join(sb, "j")
         .select(
@@ -1153,8 +1105,7 @@ def prefix_filter_pairs(
                 6,
             ).alias("jac"),
         )
-        .filter(F.col("jac") >= theta),
-        toks,
+        .filter(F.col("jac") >= theta)
     )
 
 
@@ -1955,18 +1906,12 @@ def cdc_dedup_ledger(
         df.select(F.col(id_col).alias("_jid"), F.col(group_col).alias("grp")),
         F.col(id_col) == F.col("_jid"),
     )
-    # r12 (guide §5; the near_dup_pairs persist precedent): the chunk
-    # frame feeds BOTH the global occurrence agg and the instance
-    # join — without a persist the whole CDC chain (position explode,
-    # boundary filter, lag window, chunk hashing) runs twice.
-    # r13: scoped — released when the caller drops the result.
-    from zappy_spark.operators._scoped import cache_scoped, own
-
-    chunks = cache_scoped(chunks)
+    # feeds both the occurrence agg and the instance join
+    chunks = chunks.localCheckpoint(eager=False)
     occ = chunks.groupBy("chunk_hash").agg(F.count("*").alias("_occ"))
     inst = chunks.join(occ, "chunk_hash")
     dup = (F.col("_occ") > 1).cast("bigint")
-    return own(
+    return (
         inst.groupBy("grp")
         .agg(
             F.count("*").alias("n_chunks"),
@@ -1974,8 +1919,7 @@ def cdc_dedup_ledger(
             F.sum(dup).alias("dup_chunks"),
             F.sum(dup * F.col("chunk_len")).cast("bigint").alias("dup_bytes"),
         )
-        .withColumnRenamed("grp", group_col),
-        chunks,
+        .withColumnRenamed("grp", group_col)
     )
 
 

@@ -455,9 +455,7 @@ def strip_markup(text: str | Column) -> Column:
     return F.trim(out)
 
 
-def tf_idf(
-    df: DataFrame, text_col: str, id_col: str, persist: bool = True
-) -> DataFrame:
+def tf_idf(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, term, tf, df, tfidf) with smooth idf
     ``ln((N+1)/(df+1)) + 1`` (sklearn's convention).
 
@@ -465,24 +463,20 @@ def tf_idf(
     aggregation; document frequency then derives from the tf table
     itself (its rows are already distinct (doc, term) pairs), so the
     corpus is never tokenized twice and there is no separate
-    ``distinct()`` shuffle. tf is persisted by default — it feeds the
-    df aggregation and the final join — and N broadcasts as a 1-row
+    ``distinct()`` shuffle. tf is checkpointed — it feeds the df
+    aggregation and the final join — and N broadcasts as a 1-row
     frame from a column-pruned count."""
     toks = df.select(
         F.col(id_col), F.explode(tokens_ws(F.col(text_col))).alias("term")
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    tf_c = None
-    if persist:
-        # r13: scoped — released when the caller drops the result
-        from zappy_spark.operators._scoped import cache_scoped
-
-        tf = tf_c = cache_scoped(tf)
-    from zappy_spark.operators._scoped import own
-
+    tf = (
+        toks.groupBy(id_col, "term")
+        .agg(F.count("*").alias("tf"))
+        .localCheckpoint(eager=False)
+    )
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = df.select(F.count("*").alias("_n"))
-    return own(
+    return (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
@@ -497,8 +491,7 @@ def tf_idf(
                     + F.lit(1.0)
                 )
             ).alias("tfidf"),
-        ),
-        tf_c,
+        )
     )
 
 
@@ -725,7 +718,6 @@ def boilerplate_fraction(
     id_col: str,
     k: int = 3,
     min_docs: int = 2,
-    persist: bool = True,
 ) -> DataFrame:
     """Per-document boilerplate score: the fraction of a doc's
     distinct k-grams that are corpus-frequent (``frequent_ngrams``).
@@ -733,7 +725,7 @@ def boilerplate_fraction(
     quality filter.
 
     The exploded (doc, gram) frame feeds BOTH the frequency aggregate
-    and the per-doc hit join, so it is persisted by default — at
+    and the per-doc hit join, so it is checkpointed — at
     corpus scale the rescan would double the dominant stage. The
     frequent-gram side joins on the high-cardinality gram key (an
     equi-shuffle, balanced by construction); no broadcast is assumed
@@ -747,13 +739,7 @@ def boilerplate_fraction(
         F.explode(
             F.array_distinct(word_shingles(F.col(text_col), k))
         ).alias("g"),
-    )
-    per_doc_c = None
-    if persist:
-        # r13: scoped — released when the caller drops the result
-        from zappy_spark.operators._scoped import cache_scoped
-
-        per_doc = per_doc_c = cache_scoped(per_doc)
+    ).localCheckpoint(eager=False)
     freq = (
         per_doc.groupBy("g")
         .agg(F.count("*").alias("n_docs"))
@@ -771,9 +757,7 @@ def boilerplate_fraction(
             F.array_distinct(word_shingles(F.col(text_col), k))
         ).cast("bigint").alias("n_grams"),
     )
-    from zappy_spark.operators._scoped import own
-
-    return own(
+    return (
         base.join(hits, id_col, "left")
         .select(
             id_col,
@@ -784,8 +768,7 @@ def boilerplate_fraction(
                 / F.greatest(F.col("n_grams"), F.lit(1)),
                 6,
             ).alias("boilerplate_frac"),
-        ),
-        per_doc_c,
+        )
     )
 
 
